@@ -153,9 +153,14 @@ def _delta_expr(path: str, dtype: T.DataType, cfg: DiffConfig) -> Column:
         delta = F.when(both, F.levenshtein(l, r).cast("double"))
     elif isinstance(dtype, (T.TimestampType, T.DateType)):
         # epoch-seconds numeric delta; Avro encodes these as longs so the
-        # reference diffs them numerically too
+        # reference diffs them numerically too. DATE has no cast to
+        # double: take the day difference and scale it to seconds.
         dtype_col = F.when(both, F.lit(NUMERIC)).otherwise(F.lit(UNKNOWN))
-        delta = F.when(both, r.cast("double") - l.cast("double"))
+        if isinstance(dtype, T.DateType):
+            delta = F.when(
+                both, ((F.unix_date(r) - F.unix_date(l)) * 86400).cast("double"))
+        else:
+            delta = F.when(both, r.cast("double") - l.cast("double"))
     elif isinstance(dtype, T.ArrayType) and isinstance(dtype.elementType, _NUMERIC_TYPES):
         # numeric vectors: cosine distance when same length, else UNKNOWN
         # (AvroDiffy.scala:117-142: size mismatch ⇒ UNKNOWN)

@@ -103,6 +103,17 @@ formats:
   retention.
 * **Metadata-only COUNT** (:func:`snapshot_rowcount`) — exact row
   counts from manifest sums, refused while MoR sidecars are pending.
+
+Main and branch writes share one target. Each DML operation (append,
+CoW and MoR merge, CoW and MoR range delete, MoR position delete, fold,
+compact, cluster) has ONE body, written against a private write target
+(``_Target``) that a commit builds for main or for a named branch. The
+target holds the head manifest, the id a no-op returns, the sequence
+parent new files are stamped from, and whether CDC change files are
+written (main only); its ``publish`` is the ref's own atomic create
+around one shared manifest assembly (``_write_manifest``). The branch
+entry points (``merge_branch``, ``fold_branch_deletes``, …) are
+one-call wrappers over the same bodies as their main twins.
 """
 
 from __future__ import annotations
@@ -154,20 +165,33 @@ class SnapshotExpired(Exception):
     ``snapshot_changes`` from its id."""
 
 
+def _write_tmp_json(path: str, payload) -> str:
+    """Write ``payload`` to a fresh, fsynced tmp sibling of ``path`` and
+    return the tmp path — the first half of every metadata publish."""
+    tmp = path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(payload, f)
+        f.flush()
+        os.fsync(f.fileno())
+    return tmp
+
+
+def _replace_json(path: str, payload) -> None:
+    """Atomically (re)write a metadata JSON file: tmp + fsync + rename,
+    so a concurrent reader sees the old or the new content, complete."""
+    os.replace(_write_tmp_json(path, payload), path)
+
+
 def _write_exclusive_json(path: str, payload: dict) -> None:
     """Crash-safe exclusive-create of a metadata JSON file: write a tmp
     sibling, fsync, then hard-link to the final name — the link is the
     atomicity point (exactly one writer wins; a crash mid-write can
     never leave a truncated file under the published name, which a
     plain open('x') + dump could). Raises FileExistsError if the name
-    is taken. Same protocol as the manifest publish in
-    :func:`_publish`; object-store deployments swap the link for a
-    conditional PUT."""
-    tmp = path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
+    is taken. Same protocol as the main manifest publish
+    (:func:`_link_main_manifest`); object-store deployments swap the
+    link for a conditional PUT."""
+    tmp = _write_tmp_json(path, payload)
     try:
         try:
             os.link(tmp, path)
@@ -415,12 +439,7 @@ def evolve_partition_spec(table_path: str, spec: list[dict]) -> int:
         wrote_file = False
     else:
         spec_id = len(specs)
-        tmp = p + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"specs": specs + [norm]}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, p)
+        _replace_json(p, {"specs": specs + [norm]})
         wrote_file = True
     try:
         return _publish(
@@ -442,12 +461,7 @@ def evolve_partition_spec(table_path: str, spec: list[dict]) -> int:
             # names (the offset counter is derived from the recorded
             # specs, which the revert restored), re-adopting those
             # orphaned tuples for pruning/drop_partition.
-            tmp = p + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump({"specs": specs}, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, p)
+            _replace_json(p, {"specs": specs})
         raise
 
 
@@ -554,13 +568,7 @@ def set_table_property(table_path: str, key: str, value) -> None:
         raise ValueError(f"bad property key {key!r}")
     d = os.path.join(table_path, _SNAP_DIR, _PROPS_DIR)
     os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, f"{key}.json")
-    tmp = p + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(value, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    _replace_json(os.path.join(d, f"{key}.json"), value)
 
 
 def set_bloom_filter(
@@ -1316,6 +1324,92 @@ def _load_files_sidecar(table_path: str, rel: str) -> list[dict]:
     return out
 
 
+def _write_manifest(
+    table_path: str,
+    dest: str,
+    sidecar_id: int,
+    manifest: dict,
+    files: list[dict],
+    carry: dict,
+    create,
+) -> None:
+    """The manifest assembly shared by main and branch commits, around
+    each ref's own atomic-create primitive ``create(dest, manifest)``:
+    carry the field-id evolution state from ``carry`` unless the commit
+    sets its own, record the commit-time totals, externalize the files
+    list when needed, and never strand that sidecar on a failed
+    create."""
+    if "columns" not in manifest:
+        # field-id evolution state rides in EVERY manifest once it
+        # exists (a manifest must be self-contained: time travel and
+        # expiry would otherwise lose the id bindings old files need)
+        for k in ("columns", "schema_v", "schema_log"):
+            if k in carry:
+                manifest[k] = carry[k]
+    # commit-time totals: the `.snapshots`/`.history` inspection tables
+    # must stay O(#commits) even over externalized manifests — without
+    # these, summarizing a long history would parse every files sidecar
+    # ever written. Readers fall back to summing the files list for
+    # pre-totals manifests.
+    manifest["n_files"] = len(files)
+    manifest["rows_total"] = sum(int(e.get("rows") or 0) for e in files)
+    manifest["bytes_total"] = sum(int(e.get("bytes") or 0) for e in files)
+    files_ref = None
+    # externalize past the file-count threshold OR as soon as any entry
+    # carries a bloom bitmap: bitmaps are the one metadata field
+    # proportional to data rows (~bits_per_key/8 bytes per row), and
+    # inlining them would break the "manifest JSON is metadata-scale"
+    # invariant — the parquet sidecar is the puffin/bloom-index analog
+    if len(files) > FILES_INLINE_MAX or any("bloom" in e for e in files):
+        files_ref = _write_files_sidecar(table_path, sidecar_id, files)
+        manifest["files_ref"] = files_ref
+    else:
+        manifest["files"] = files
+    try:
+        create(dest, manifest)
+    except BaseException:
+        # a failed publish must not strand its externalized sidecar
+        # (vacuum also sweeps aged metadata debris, but clean up the
+        # known case immediately)
+        if files_ref is not None:
+            fp = os.path.join(table_path, files_ref)
+            if os.path.exists(fp):
+                os.remove(fp)
+        raise
+
+
+def _link_main_manifest(dest: str, manifest: dict) -> None:
+    """Main's atomic create of ``v{N}.json``. Hard-link = the commit's
+    atomicity point: the fully-written tmp content appears under the
+    name in ONE metadata operation, and exactly one writer can win. A
+    crash can never leave a truncated manifest published — the
+    create-then-copy alternative could. (Object-store deployments swap
+    this single call for a conditional PUT / catalog CAS.)"""
+    tmp = _write_tmp_json(dest, manifest)
+    try:
+        try:
+            os.link(tmp, dest)
+        except FileExistsError:
+            raise
+        except OSError:
+            # filesystem without hard-link support (some NFS/SMB/FUSE
+            # mounts): fall back to exclusive-create + copy + fsync —
+            # still exactly-one-winner, with the (FS-specific) caveat
+            # that a crash mid-copy can leave a truncated manifest,
+            # which the link path exists to rule out where available
+            with open(dest, "x") as dst, open(tmp) as src:
+                dst.write(src.read())
+                dst.flush()
+                os.fsync(dst.fileno())
+    except FileExistsError as e:
+        raise CommitConflict(
+            f"snapshot {manifest['snapshot_id']} already published "
+            f"({dest}); re-read the current snapshot and retry"
+        ) from e
+    finally:
+        os.remove(tmp)
+
+
 def _publish(
     table_path: str,
     parent: int | None,
@@ -1345,90 +1439,22 @@ def _publish(
         "changes": changes or [],
         **(extra or {}),
     }
+    # evolution commits set the field-id state via ``extra``; everything
+    # else inherits the parent's; rollback restores the TARGET's
+    # (inherit_evolution=False)
+    carry: dict = {}
     if inherit_evolution and "columns" not in manifest and parent:
-        # field-id evolution state rides in EVERY manifest once it
-        # exists (a manifest must be self-contained: time travel and
-        # expiry would otherwise lose the id bindings old files need).
-        # Evolution commits set it via ``extra``; everything else
-        # inherits the parent's; rollback restores the TARGET's
-        # (inherit_evolution=False).
-        pm = parent_manifest
-        if pm is None:
+        carry = parent_manifest
+        if carry is None:
             try:
-                pm = read_manifest(table_path, parent, load_files=False)
+                carry = read_manifest(table_path, parent, load_files=False)
             except FileNotFoundError:
-                pm = {}  # fabricated/expired parent: the publish below
+                carry = {}  # fabricated/expired parent: the publish below
                 # will conflict or the caller validated the real parent
-        for k in ("columns", "schema_v", "schema_log"):
-            if k in pm:
-                manifest[k] = pm[k]
-    # commit-time totals: the `.snapshots`/`.history` inspection tables
-    # must stay O(#commits) even over externalized manifests — without
-    # these, summarizing a long history would parse every files sidecar
-    # ever written (r10 verdict). Recorded on every commit; readers fall
-    # back to summing the files list for pre-totals manifests.
-    manifest["n_files"] = len(files)
-    manifest["rows_total"] = sum(int(e.get("rows") or 0) for e in files)
-    manifest["bytes_total"] = sum(int(e.get("bytes") or 0) for e in files)
-    files_ref = None
-    # externalize past the file-count threshold OR as soon as any entry
-    # carries a bloom bitmap: bitmaps are the one metadata field
-    # proportional to data rows (~bits_per_key/8 bytes per row), and
-    # inlining them would break the "manifest JSON is metadata-scale"
-    # invariant — the parquet sidecar is the puffin/bloom-index analog
-    if len(files) > FILES_INLINE_MAX or any("bloom" in e for e in files):
-        files_ref = _write_files_sidecar(table_path, new_id, files)
-        manifest["files_ref"] = files_ref
-    else:
-        manifest["files"] = files
-    tmp = _snap_path(table_path, new_id) + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
-    published = False
-    try:
-        try:
-            # hard-link = the commit's atomicity point: the fully-written
-            # tmp content appears under v{new_id} in ONE metadata
-            # operation, and exactly one writer can win (link fails with
-            # FileExistsError if the name is taken). A crash can never
-            # leave a truncated manifest published — the alternative
-            # create-then-copy could. (Object-store deployments swap this
-            # single call for a conditional PUT / catalog CAS.)
-            os.link(tmp, _snap_path(table_path, new_id))
-        except FileExistsError as e:
-            raise CommitConflict(
-                f"snapshot {new_id} already published under {table_path}; "
-                "re-read the current snapshot and retry"
-            ) from e
-        except OSError:
-            # filesystem without hard-link support (some NFS/SMB/FUSE
-            # mounts): fall back to exclusive-create + copy + fsync —
-            # still exactly-one-winner, with the (FS-specific) caveat
-            # that a crash mid-copy can leave a truncated manifest,
-            # which the link path exists to rule out where available
-            try:
-                with open(_snap_path(table_path, new_id), "x") as dst, \
-                        open(tmp) as src:
-                    dst.write(src.read())
-                    dst.flush()
-                    os.fsync(dst.fileno())
-            except FileExistsError as e:
-                raise CommitConflict(
-                    f"snapshot {new_id} already published under "
-                    f"{table_path}; re-read the current snapshot and retry"
-                ) from e
-        published = True
-    finally:
-        os.remove(tmp)
-        if not published and files_ref is not None:
-            # a failed publish must not strand its externalized sidecar
-            # (vacuum also sweeps aged metadata debris, but clean up the
-            # known case immediately)
-            p = os.path.join(table_path, files_ref)
-            if os.path.exists(p):
-                os.remove(p)
+    _write_manifest(
+        table_path, _snap_path(table_path, new_id), new_id, manifest,
+        files, carry, _link_main_manifest,
+    )
     return new_id
 
 
@@ -1542,6 +1568,96 @@ def _stamp_seq(entries: list[dict], parent: int | None) -> list[dict]:
     return entries
 
 
+class _Target:
+    """The ref one commit writes to — main (``branch=None``) or a named
+    branch — built once per commit. Every DML body below is written
+    once against it; the two refs differ only in what it holds:
+
+    * ``m``: the head manifest, read once (None only for a main append
+      that creates the table);
+    * ``noop_id``: what a commit that changes nothing returns — the main
+      parent, or the branch-local head id;
+    * ``seq_parent``: the parent :func:`_stamp_seq` numbers new files
+      from — the main parent, or fork point + branch depth (so MoR
+      deletes carried from the fork still shadow only older files);
+    * ``cdc``: whether CDC change files are written — main only; a
+      branch's one observable change is its fast-forward commit;
+    * :meth:`publish`."""
+
+    def __init__(
+        self, table_path: str, branch: str | None = None,
+        create: bool = False,
+    ):
+        self.path, self.branch = table_path, branch
+        if branch is None:
+            self.parent = current_snapshot_id(table_path)
+            if self.parent is None and not create:
+                raise FileNotFoundError(f"no snapshots under {table_path}")
+            self.m = None if self.parent is None \
+                else read_manifest(table_path, self.parent)
+            self.noop_id = self.seq_parent = self.parent
+            self.cdc = True
+        else:
+            _heal_interrupted_ff(table_path, branch)
+            self.k, self.m = _branch_head_manifest(table_path, branch)
+            with open(_branch_ref_path(table_path, branch)) as f:
+                self.ref = json.load(f)
+            self.noop_id = self.k
+            self.seq_parent = self.ref["base"] + self.k
+            self.cdc = False
+        # the seq of the commit being built — delete entries carry it
+        self.seq = (self.seq_parent or 0) + 1
+
+    def stamp(self, entries: list[dict]) -> list[dict]:
+        return _stamp_seq(entries, self.seq_parent)
+
+    def publish(
+        self,
+        files: list[dict],
+        deletes: list[dict],
+        operation: str,
+        changes: list[dict] | None = None,
+        extra: dict | None = None,
+    ) -> int:
+        """Publish the commit; returns its id (branch-local on a
+        branch). CDC bookkeeping (``changes``, ``extra``) rides main
+        manifests only."""
+        if self.branch is not None:
+            return _publish_branch_commit(
+                self.path, self.branch, self.k, self.m, self.ref,
+                files, deletes, operation,
+            )
+        # a commit that planned against the parent's files must not
+        # publish over a newer snapshot (an append plans nothing: the
+        # exclusive create alone decides its race)
+        if operation != "append" \
+                and current_snapshot_id(self.path) != self.parent:
+            raise CommitConflict(
+                f"snapshot advanced past {self.parent} during "
+                f"{operation} — replan"
+            )
+        return _publish(
+            self.path, self.parent, files, self.m["schema"], operation,
+            extra=extra, deletes=deletes, changes=changes,
+            parent_manifest=self.m,
+        )
+
+
+def _append(t: _Target, df: DataFrame, extra: dict | None = None) -> int:
+    if t.m is None:  # this commit creates the table with df's schema
+        os.makedirs(t.path, exist_ok=True)
+        t.m = {"files": [], "schema": df.schema.json()}
+    else:
+        _check_schema(df, t.m)
+    _enforce_constraints(df, t.path)
+    new_files = t.stamp(
+        _write_data_files(df, t.path, current_manifest=t.m))
+    return t.publish(
+        t.m["files"] + new_files, t.m.get("deletes", []), "append",
+        extra=extra,
+    )
+
+
 def commit_append(
     df: DataFrame,
     table_path: str,
@@ -1569,26 +1685,7 @@ def commit_append(
             )
         os.makedirs(table_path, exist_ok=True)
         _store_partition_spec(table_path, partition_spec)
-    parent = current_snapshot_id(table_path)
-    base: list[dict] = []
-    deletes: list[dict] = []
-    if parent is not None:
-        m = read_manifest(table_path, parent)
-        _check_schema(df, m)
-        base = m["files"]
-        deletes = m.get("deletes", [])
-        schema_json = m["schema"]
-    else:
-        os.makedirs(table_path, exist_ok=True)
-        schema_json = df.schema.json()
-    _enforce_constraints(df, table_path)
-    pm = m if parent is not None else None
-    new_files = _stamp_seq(
-        _write_data_files(df, table_path, current_manifest=pm), parent)
-    return _publish(
-        table_path, parent, base + new_files, schema_json, "append",
-        extra=extra, deletes=deletes, parent_manifest=pm,
-    )
+    return _append(_Target(table_path, create=True), df, extra)
 
 
 def commit_replace(
@@ -1842,10 +1939,8 @@ def drop_partition(
             f"unknown partition names {sorted(unknown)}; spec has "
             f"{sorted(names)}"
         )
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
+    t = _Target(table_path)
+    m = t.m
     unaligned = [
         e["path"] for e in m["files"]
         if any(n not in e.get("partition", {}) for n in values)
@@ -1865,7 +1960,7 @@ def drop_partition(
 
     dropped = [e for e in m["files"] if _match(e)]
     if not dropped:
-        return parent
+        return t.noop_id
     kept = [e for e in m["files"] if not _match(e)]
     change_files: list[dict] = []
     if record_changes:
@@ -1874,14 +1969,8 @@ def drop_partition(
             old.withColumn("_change_type", F.lit("delete")),
             table_path, subdir=_CHANGES_DIR, current_manifest=m,
         )
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while dropping — replan"
-        )
-    return _publish(
-        table_path, parent, kept, m["schema"], "drop-partition",
-        deletes=m.get("deletes", []),
-        changes=change_files,
+    return t.publish(
+        kept, m.get("deletes", []), "drop-partition", changes=change_files,
         extra={"change_op": "delete", "dropped_partition": {
             k: (None if v is None else str(v)) for k, v in values.items()
         }},
@@ -2277,11 +2366,8 @@ def _read_entries(
             if d.get("kind") == "range":
                 # predicate delete: drop rows inside the box; NULL-valued
                 # rows never match a range (same rule as the CoW delete)
-                inside = None
-                for c, (lo, hi) in d["box"].items():
-                    cond = F.col(c).between(lo, hi)
-                    inside = cond if inside is None else (inside & cond)
-                df = df.where(F.coalesce(~inside, F.lit(True)))
+                df = df.where(
+                    F.coalesce(~_inside_box(d["box"]), F.lit(True)))
             elif d.get("kind") == "position":
                 if id(d) in pos_live:
                     side = spark.read.schema(_POS_SIDECAR_SCHEMA).parquet(
@@ -2536,10 +2622,14 @@ def snapshot_manifest(
 ) -> DataFrame:
     """(path, rows, bytes) of a snapshot's files as a DataFrame — the
     input ``layout.compaction_plan`` bin-packs. Metadata-scale."""
-    m = read_manifest(table_path, snapshot_id)
-    rows = [(e["path"], e["rows"], e["bytes"]) for e in m["files"]]
-    schema = "path string, rows bigint, bytes bigint"
-    return local_df(spark, rows, schema)
+    return _files_frame(spark, read_manifest(table_path, snapshot_id))
+
+
+def _files_frame(spark: SparkSession, m: dict) -> DataFrame:
+    return local_df(
+        spark, [(e["path"], e["rows"], e["bytes"]) for e in m["files"]],
+        "path string, rows bigint, bytes bigint",
+    )
 
 
 def compact_snapshot(
@@ -2555,18 +2645,21 @@ def compact_snapshot(
     Scale: each bin is ~``target_bytes`` regardless of table size, so a
     task rewrites one bin independently; the planner input is the
     metadata-scale manifest."""
+    return _compact(spark, _Target(table_path), target_bytes)
+
+
+def _compact(spark: SparkSession, t: _Target, target_bytes: int) -> int | None:
     from ratatool_spark.operators.layout import compaction_plan
 
-    parent = current_snapshot_id(table_path)
-    manifest = snapshot_manifest(spark, table_path, parent)
-    plan = compaction_plan(manifest, "bytes", ["path"], target_bytes)
+    m = t.m
+    plan = compaction_plan(_files_frame(spark, m), "bytes", ["path"],
+                           target_bytes)
     bins: dict[int, list[str]] = {}
     for r in plan.collect():  # metadata-scale: one row per file
         bins.setdefault(r["bin"], []).append(r["path"])
     multi = {b: ps for b, ps in bins.items() if len(ps) > 1}
     if not multi:
         return None
-    m = read_manifest(table_path, parent)
     by_path = {e["path"]: e for e in m["files"]}
     # write every bin's merged file first (orphans if we lose the race),
     # then publish ONE replace commit covering all bins. Reads go
@@ -2575,25 +2668,17 @@ def compact_snapshot(
     # old deletes no longer apply to them); untouched files keep their
     # seq and stay shadowed — correctness is layout-independent.
     new_files: list[dict] = []
-    removed: list[str] = []
+    removed: set[str] = set()
     for b in sorted(multi):
-        paths = multi[b]
         merged = _read_entries(
-            spark, table_path, m, [by_path[p] for p in paths]
+            spark, t.path, m, [by_path[p] for p in multi[b]]
         ).coalesce(1)
         new_files.extend(
-            _write_data_files(merged, table_path, current_manifest=m))
-        removed.extend(paths)
-    kept = [e for e in m["files"] if e["path"] not in set(removed)]
-    _stamp_seq(new_files, parent)
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while compacting — replan"
-        )
-    return _publish(
-        table_path, parent, kept + new_files, m["schema"], "replace",
-        deletes=m.get("deletes", []), parent_manifest=m,
-    )
+            _write_data_files(merged, t.path, current_manifest=m))
+        removed.update(multi[b])
+    kept = [e for e in m["files"] if e["path"] not in removed]
+    return t.publish(
+        kept + t.stamp(new_files), m.get("deletes", []), "replace")
 
 
 def evolve_add_columns(
@@ -2909,6 +2994,66 @@ def _split_by_box(
     return touched, [e for e in m["files"] if e["path"] not in tset]
 
 
+def _is_nan(v) -> bool:
+    return isinstance(v, float) and v != v
+
+
+def _inside_box(box: dict[str, tuple]):
+    """The conjunctive range predicate of a ``{col: (lo, hi)}`` box —
+    NULL on a NULL-valued row, which callers coalesce: a NULL never
+    lies inside a range."""
+    inside = None
+    for c, (lo, hi) in box.items():
+        cond = F.col(c).between(lo, hi)
+        inside = cond if inside is None else (inside & cond)
+    return inside
+
+
+def _batch_key_stats(changes: DataFrame, keys: list[str], op: str):
+    """One aggregate pass over a merge batch: (row, nn_expr) where row
+    carries count / fully-keyed count / per-key min-max bounds. Raises
+    on duplicate keys among fully-keyed rows — both copies would
+    survive the merge (NULL-keyed rows are pure inserts, exempt)."""
+    nn = None
+    for c in keys:
+        e = F.col(c).isNotNull()
+        nn = e if nn is None else (nn & e)
+    aggs = [
+        F.count(F.lit(1)).alias("__n"),
+        F.count(F.when(nn, 1)).alias("__nk"),
+        F.count_distinct(*[F.col(c) for c in keys]).alias("__nd"),
+    ]
+    for c in keys:
+        aggs += [F.min(F.col(c)).alias(f"lo_{c}"),
+                 F.max(F.col(c)).alias(f"hi_{c}")]
+    row = changes.agg(*aggs).first()
+    if row["__nd"] < row["__nk"]:
+        raise ValueError(
+            f"{op}: changes contain {row['__nk'] - row['__nd']} "
+            f"duplicate-key row(s) on {keys} — both copies would "
+            "survive; dedup the batch first"
+        )
+    return row, nn
+
+
+def _batch_split(m: dict, row, keys: list[str], spark, changes):
+    """(touched, untouched) head files for a merge batch, using the
+    batch's bounding box + per-file bloom refinement — the same pruning
+    the main-table CoW merge applies (NULL-lo ⇒ pure insert; NaN bounds
+    ⇒ stats unusable, touch everything)."""
+    if any(row[f"lo_{c}"] is None for c in keys):
+        return [], m["files"]
+    if any(_is_nan(row[f"lo_{c}"]) or _is_nan(row[f"hi_{c}"]) for c in keys):
+        return m["files"], []
+    box = {c: (row[f"lo_{c}"], row[f"hi_{c}"]) for c in keys}
+    touched, untouched = _split_by_box(m, box)
+    if any(e.get("bloom") for e in touched):
+        touched, skipped = _bloom_refine_touched(
+            spark, m, touched, changes, keys)
+        untouched = untouched + skipped
+    return touched, untouched
+
+
 def merge_snapshot(
     spark: SparkSession,
     table_path: str,
@@ -2939,76 +3084,37 @@ def merge_snapshot(
     replay exactly what this commit did without diffing file sets —
     the Delta change-data-feed design. Cost: one extra pass over the
     touched files."""
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
-    _check_schema(changes, m)
-    _enforce_constraints(changes, table_path)
-    # one pass: the change batch's per-key-column bounding box PLUS the
-    # duplicate-key guard — two change rows sharing a key would BOTH
-    # land in the new snapshot (the anti-join only removes OLD rows),
-    # silently breaking the one-row-per-key contract
-    nn = None
-    for k in keys:
-        c = F.col(k).isNotNull()
-        nn = c if nn is None else (nn & c)
-    aggs = [
-        F.count(F.lit(1)).alias("__n"),
-        F.count(F.when(nn, 1)).alias("__nk"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("__nd"),
-    ]
-    for k in keys:
-        aggs += [F.min(F.col(k)).alias(f"lo_{k}"), F.max(F.col(k)).alias(f"hi_{k}")]
-    row = changes.agg(*aggs).first()
-    if row["__n"] == 0:  # empty change batch: no-op commit
-        return parent
-    # duplicate keys among fully-keyed rows (count_distinct skips rows
-    # with any NULL key — those never match existing rows and insert
-    # as-is, so they are exempt from the uniqueness contract)
-    if row["__nd"] < row["__nk"]:
-        raise ValueError(
-            f"merge_snapshot: changes contain {row['__nk'] - row['__nd']} "
-            f"duplicate-key row(s) on {keys} — both copies would be "
-            "inserted; dedup the batch first"
-        )
-    def _nan(v):
-        return isinstance(v, float) and v != v
+    return _merge_cow(spark, _Target(table_path), changes, keys,
+                      record_changes)
 
-    if any(row[f"lo_{k}"] is None for k in keys):
-        # some key column is NULL on EVERY change row — no change row is
-        # fully keyed on it, so nothing can match an existing row:
-        # pure insert, no file touched
-        touched, untouched = [], m["files"]
-    elif any(_nan(row[f"lo_{k}"]) or _nan(row[f"hi_{k}"]) for k in keys):
-        # a float key column contains NaN: the bounding box degenerates
-        # (every `stat <= NaN` comparison is False, so NO file would
-        # intersect) while Spark's join DOES match NaN keys to existing
-        # NaN rows — pruning on that box would silently append
-        # duplicates. NaN stats are unusable stats: touch every file,
-        # same as stats-absent.
-        touched, untouched = m["files"], []
-    else:
-        box = {k: (row[f"lo_{k}"], row[f"hi_{k}"]) for k in keys}
-        touched, untouched = _split_by_box(m, box)
-        if any(e.get("bloom") for e in touched):
-            # bloom refinement: a SCATTERED key batch intersects every
-            # range box, but each file's bloom still answers "could
-            # this file hold one of the batch keys" — the rewrite set
-            # shrinks to actual (plus false-positive) holders
-            touched, skipped = _bloom_refine_touched(
-                spark, m, touched, changes, keys)
-            untouched = untouched + skipped
+
+def _merge_cow(
+    spark: SparkSession, t: _Target, changes: DataFrame, keys: list[str],
+    record_changes: bool = True,
+) -> int:
+    m = t.m
+    _check_schema(changes, m)
+    _enforce_constraints(changes, t.path)
+    # one pass: the batch's per-key-column bounding box PLUS the
+    # duplicate-key guard — two change rows sharing a key would BOTH
+    # land in the new snapshot (the anti-join only removes OLD rows)
+    row, nn = _batch_key_stats(changes, keys, "merge")
+    if row["__n"] == 0:  # empty change batch: no-op
+        return t.noop_id
+    touched, untouched = _batch_split(m, row, keys, spark, changes)
     schema = StructType.fromJson(json.loads(m["schema"]))
     cols = [f.name for f in schema.fields]
+    record = record_changes and t.cdc
     change_files: list[dict] = []
     if touched:
-        old = _read_entries(spark, table_path, m, touched)
-        ckeys = changes.select(*keys).where(nn).distinct()
+        # rewritten files read through the head's pending MoR deletes,
+        # so a CoW merge after a MoR commit composes correctly
+        old = _read_entries(spark, t.path, m, touched)
         kept = old.join(F.broadcast(changes.select(*keys).distinct()),
                         keys, "left_anti")
         new_data = kept.unionByName(changes.select(*cols))
-        if record_changes:
+        if record:
+            ckeys = changes.select(*keys).where(nn).distinct()
             # row-level CDC at commit time (the Delta CDF design): the
             # merge already knows its change set — persist it as change
             # files instead of making consumers diff file sets later.
@@ -3028,28 +3134,25 @@ def merge_snapshot(
             ).withColumn("_change_type", F.lit("insert"))
             change_files = _write_data_files(
                 pre.unionByName(post).unionByName(ins),
-                table_path, subdir=_CHANGES_DIR, current_manifest=m,
+                t.path, subdir=_CHANGES_DIR, current_manifest=m,
             )
     else:
         new_data = changes.select(*cols)
-        if record_changes:
+        if record:
             change_files = _write_data_files(
                 changes.select(*cols).withColumn(
                     "_change_type", F.lit("insert")
                 ),
-                table_path, subdir=_CHANGES_DIR, current_manifest=m,
+                t.path, subdir=_CHANGES_DIR, current_manifest=m,
             )
-    new_files = _stamp_seq(
-        _write_data_files(new_data, table_path, current_manifest=m), parent)
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while merging — replan"
-        )
-    return _publish(
-        table_path, parent, untouched + new_files, m["schema"], "replace",
-        deletes=m.get("deletes", []), changes=change_files,
+    new_files = t.stamp(
+        _write_data_files(new_data, t.path, current_manifest=m))
+    # carried deletes (older seqs) never shadow the rewrites; they
+    # still apply to the untouched older files
+    return t.publish(
+        untouched + new_files, m.get("deletes", []), "replace",
+        changes=change_files,
         extra={"change_op": "merge"} if change_files else None,
-        parent_manifest=m,
     )
 
 
@@ -3083,43 +3186,24 @@ def merge_snapshot_mor(
     :func:`snapshot_change_feed` as ``_change_type='upsert'`` (insert
     vs update is unknowable without reading the old files, which is the
     exact cost MoR defers)."""
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
+    return _merge_mor(spark, _Target(table_path), changes, keys)
+
+
+def _merge_mor(
+    spark: SparkSession, t: _Target, changes: DataFrame, keys: list[str],
+) -> int:
+    m = t.m
     _check_schema(changes, m)
-    _enforce_constraints(changes, table_path)
-    nn = None
-    for k in keys:
-        c = F.col(k).isNotNull()
-        nn = c if nn is None else (nn & c)
-    aggs = [
-        F.count(F.lit(1)).alias("__n"),
-        F.count(F.when(nn, 1)).alias("__nk"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("__nd"),
-    ]
-    for k in keys:
-        aggs += [F.min(F.col(k)).alias(f"lo_{k}"),
-                 F.max(F.col(k)).alias(f"hi_{k}")]
-    row = changes.agg(*aggs).first()
+    _enforce_constraints(changes, t.path)
+    row, nn = _batch_key_stats(changes, keys, "merge-mor")
     if row["__n"] == 0:
-        return parent
-    if row["__nd"] < row["__nk"]:
-        raise ValueError(
-            f"merge_snapshot_mor: changes contain "
-            f"{row['__nk'] - row['__nd']} duplicate-key row(s) on {keys} "
-            "— both copies would survive the read; dedup the batch first"
-        )
-
-    def _nan(v):
-        return isinstance(v, float) and v != v
-
-    # the change keys' bounding box lets fold_deletes rewrite only
+        return t.noop_id
+    # the change keys' bounding box lets a fold rewrite only
     # stats-intersecting files later; NaN degenerates it (same rule as
     # the CoW merge) — box=None means "may shadow anything"
     box = None
     if all(row[f"lo_{k}"] is not None for k in keys) and not any(
-        _nan(row[f"lo_{k}"]) or _nan(row[f"hi_{k}"]) for k in keys
+        _is_nan(row[f"lo_{k}"]) or _is_nan(row[f"hi_{k}"]) for k in keys
     ):
         box = {k: [row[f"lo_{k}"], row[f"hi_{k}"]] for k in keys}
         if not all(
@@ -3128,40 +3212,29 @@ def merge_snapshot_mor(
         ):
             box = None  # non-JSON key types (timestamp, binary): no box
     schema = StructType.fromJson(json.loads(m["schema"]))
-    new_id = parent + 1
-    new_files = _stamp_seq(
-        _write_data_files(
-            changes.select(*[f.name for f in schema.fields]), table_path,
-            current_manifest=m,
-        ),
-        parent,
-    )
-    delete_entry = None
+    new_files = t.stamp(_write_data_files(
+        changes.select(*[f.name for f in schema.fields]), t.path,
+        current_manifest=m,
+    ))
+    deletes = list(m.get("deletes", []))
     if row["__nk"] > 0:  # NULL-key rows are pure inserts: nothing to shadow
         sidecar = _write_data_files(
             changes.select(*keys).where(nn).distinct().coalesce(1),
-            table_path, subdir=_DELETES_DIR, current_manifest=m,
+            t.path, subdir=_DELETES_DIR, current_manifest=m,
         )
-        delete_entry = {
+        entry = {
             "paths": [e["path"] for e in sidecar],
             "rows": sum(e["rows"] for e in sidecar),
             "keys": keys,
-            "seq": new_id,
+            "seq": t.seq,
             "box": box,
         }
         if "schema_v" in m:
             # keys/box are the write-time names — readers translate
             # them by field id after later renames
-            delete_entry["schema_v"] = m["schema_v"]
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while merging — replan"
-        )
-    deletes = m.get("deletes", []) + ([delete_entry] if delete_entry else [])
-    return _publish(
-        table_path, parent, m["files"] + new_files, m["schema"],
-        "merge-mor", deletes=deletes, parent_manifest=m,
-    )
+            entry["schema_v"] = m["schema_v"]
+        deletes.append(entry)
+    return t.publish(m["files"] + new_files, deletes, "merge-mor")
 
 
 def delete_snapshot_where_mor(
@@ -3186,13 +3259,17 @@ def delete_snapshot_where_mor(
     stats-intersecting files (still zero data rewrite — the deferred
     cost is the rewrite, not the scan). Pass False for a pure-metadata
     commit when no feed consumer exists."""
+    return _delete_where_mor(spark, _Target(table_path), where,
+                             record_changes)
+
+
+def _delete_where_mor(
+    spark: SparkSession, t: _Target, where: dict[str, tuple],
+    record_changes: bool = True,
+) -> int:
     import datetime
 
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
-    new_id = parent + 1
+    m = t.m
 
     def _bound(v):
         # the box must live in the JSON manifest: date/datetime bounds
@@ -3208,41 +3285,30 @@ def delete_snapshot_where_mor(
         if isinstance(v, (int, float, str)):
             return v
         raise ValueError(
-            f"delete_snapshot_where_mor: box bound {v!r} "
+            f"merge-on-read range delete: box bound {v!r} "
             f"({type(v).__name__}) is not manifest-serializable — use "
             "int/float/str/date/datetime bounds, or the copy-on-write "
-            "delete_snapshot_where"
+            "range delete"
         )
 
     box = {c: [_bound(lo), _bound(hi)] for c, (lo, hi) in where.items()}
     change_files: list[dict] = []
-    if record_changes:
+    if record_changes and t.cdc:
         touched, _ = _split_by_box(m, where)
         if touched:
-            old = _read_entries(spark, table_path, m, touched)
-            inside = None
-            for c, (lo, hi) in where.items():
-                cond = F.col(c).between(lo, hi)
-                inside = cond if inside is None else (inside & cond)
+            old = _read_entries(spark, t.path, m, touched)
             change_files = _write_data_files(
-                old.where(F.coalesce(inside, F.lit(False))).withColumn(
-                    "_change_type", F.lit("delete")
-                ),
-                table_path, subdir=_CHANGES_DIR, current_manifest=m,
+                old.where(F.coalesce(_inside_box(where), F.lit(False)))
+                .withColumn("_change_type", F.lit("delete")),
+                t.path, subdir=_CHANGES_DIR, current_manifest=m,
             )
-    delete_entry = {"kind": "range", "box": box, "seq": new_id}
+    entry = {"kind": "range", "box": box, "seq": t.seq}
     if "schema_v" in m:
-        delete_entry["schema_v"] = m["schema_v"]
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while deleting — replan"
-        )
-    return _publish(
-        table_path, parent, m["files"], m["schema"], "delete-mor",
-        deletes=m.get("deletes", []) + [delete_entry],
+        entry["schema_v"] = m["schema_v"]
+    return t.publish(
+        m["files"], m.get("deletes", []) + [entry], "delete-mor",
         changes=change_files,
         extra={"change_op": "delete"} if change_files else None,
-        parent_manifest=m,
     )
 
 
@@ -3275,21 +3341,22 @@ def delete_snapshot_rows_mor(
     CDC feed exact). ``record_changes`` persists the deleted rows as
     ``_change_type='delete'`` change files (one scan, zero rewrite),
     same contract as the range form."""
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
+    return _delete_rows_mor(spark, _Target(table_path), condition,
+                            record_changes)
+
+
+def _delete_rows_mor(
+    spark: SparkSession, t: _Target, condition, record_changes: bool = True,
+) -> int:
     if isinstance(condition, str):
         condition = F.expr(condition)
-    m = read_manifest(table_path, parent)
-    new_id = parent + 1
-    cur = _read_entries(
-        spark, table_path, m, m["files"], with_positions=True
-    )
+    m = t.m
+    cur = _read_entries(spark, t.path, m, m["files"], with_positions=True)
     hits = cur.where(condition).persist()
     try:
         n = hits.count()
         if n == 0:
-            return parent
+            return t.noop_id
         files_named = sorted(
             r["__file"] for r in hits.select("__file").distinct().collect()
         )  # metadata-scale: one row per touched file
@@ -3300,42 +3367,35 @@ def delete_snapshot_rows_mor(
             # (exotic mount/symlink layout): refuse loudly — publishing
             # would record a delete that silently never applies
             raise ValueError(
-                "delete_snapshot_rows_mor: scan file paths do not "
-                f"resolve to manifest paths (e.g. {stray[:3]}) — "
-                "table_path normalization failed; use the copy-on-write "
-                "delete instead"
+                "position delete: scan file paths do not resolve to "
+                f"manifest paths (e.g. {stray[:3]}) — table_path "
+                "normalization failed; use a range delete instead"
             )
         sidecar = _write_data_files(
             hits.select(
                 F.col("__file").alias("file"), F.col("__pos").alias("pos")
             ).coalesce(1),
-            table_path, subdir=_DELETES_DIR, current_manifest=m,
+            t.path, subdir=_DELETES_DIR, current_manifest=m,
         )
         change_files: list[dict] = []
-        if record_changes:
+        if record_changes and t.cdc:
             change_files = _write_data_files(
                 hits.drop("__file", "__pos").withColumn(
                     "_change_type", F.lit("delete")
                 ),
-                table_path, subdir=_CHANGES_DIR, current_manifest=m,
+                t.path, subdir=_CHANGES_DIR, current_manifest=m,
             )
-        delete_entry = {
+        entry = {
             "kind": "position",
             "paths": [e["path"] for e in sidecar],
             "rows": n,
             "files": files_named,
-            "seq": new_id,
+            "seq": t.seq,
         }
-        if current_snapshot_id(table_path) != parent:
-            raise CommitConflict(
-                f"snapshot advanced past {parent} while deleting — replan"
-            )
-        return _publish(
-            table_path, parent, m["files"], m["schema"], "delete-mor",
-            deletes=m.get("deletes", []) + [delete_entry],
+        return t.publish(
+            m["files"], m.get("deletes", []) + [entry], "delete-mor",
             changes=change_files,
             extra={"change_op": "delete", "delete_kind": "position"},
-            parent_manifest=m,
         )
     finally:
         hits.unpersist()
@@ -3407,24 +3467,13 @@ def stage_append(
         "files": base + new_files,
         "deletes": deletes,
     }
-    tmp = sp + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(staged, f)
-        f.flush()
-        os.fsync(f.fileno())
     try:
-        try:
-            os.link(tmp, sp)
-        except FileExistsError as e:
-            raise BranchExists(
-                f"branch {branch!r} already has a staged commit under "
-                f"{table_path}"
-            ) from e
-        except OSError:
-            with open(sp, "x") as dst, open(tmp) as src:
-                dst.write(src.read())
-    finally:
-        os.remove(tmp)
+        _write_exclusive_json(sp, staged)
+    except FileExistsError as e:
+        raise BranchExists(
+            f"branch {branch!r} already has a staged commit under "
+            f"{table_path}"
+        ) from e
     return parent
 
 
@@ -3473,7 +3522,7 @@ def publish_branch(
         extra={"published_branch": branch},
         deletes=st.get("deletes", []),
     )
-    os.remove(sp)
+    _remove_published(sp)
     return new_id
 
 
@@ -3484,7 +3533,7 @@ def discard_branch(table_path: str, branch: str) -> bool:
     stage existed."""
     sp = _stage_path(table_path, branch)
     if os.path.exists(sp):
-        os.remove(sp)
+        _remove_published(sp)
         return True
     return False
 
@@ -3659,20 +3708,26 @@ def _heal_interrupted_ff(table_path: str, name: str) -> bool:
             "read_branch_snapshot, delete_branch, re-branch from "
             "current, and replay"
         )
+    _reset_branch(table_path, name, sid, k)
+    return True
+
+
+def _reset_branch(
+    table_path: str, name: str, base: int, absorbed: int
+) -> None:
+    """Re-fork branch ``name`` at main snapshot ``base`` after main
+    absorbed its local commits 1..``absorbed``: the ref moves via atomic
+    replace (a concurrent reader sees old-complete or new-complete), and
+    the absorbed manifests go — their files now belong to main."""
     import time
 
-    tmp = p + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"name": name, "base": sid, "created_at": time.time()}, f
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    _replace_json(
+        _branch_ref_path(table_path, name),
+        {"name": name, "base": base, "created_at": time.time()},
+    )
     for i in branch_snapshot_ids(table_path, name):
-        if i <= k:
+        if i <= absorbed:
             _remove_branch_manifest(table_path, name, i)
-    return True
 
 
 def commit_append_branch(
@@ -3687,24 +3742,7 @@ def commit_append_branch(
     one winner (the loser retries against the new head). CHECK
     constraints are table-level and enforced here too. Returns the
     branch-local snapshot id."""
-    import time
-
-    _heal_interrupted_ff(table_path, name)
-    k, m = _branch_head_manifest(table_path, name)
-    _check_schema(df, m)
-    _enforce_constraints(df, table_path)
-    with open(_branch_ref_path(table_path, name)) as f:
-        ref = json.load(f)
-    # seq continues from the fork point's main id + branch depth: MoR
-    # deletes carried from the fork still apply only to older files
-    new_files = _stamp_seq(
-        _write_data_files(df, table_path, current_manifest=m),
-        ref["base"] + k,
-    )
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        m["files"] + new_files, m.get("deletes", []), "append",
-    )
+    return _append(_Target(table_path, name), df)
 
 
 def _publish_branch_commit(
@@ -3731,100 +3769,19 @@ def _publish_branch_commit(
         "operation": operation,
         "committed_at": time.time(),
         "schema": m["schema"],
-        # same commit-time totals discipline as main manifests: the
-        # branch `.snapshots` view stays O(#commits)
-        "n_files": len(files),
-        "rows_total": sum(int(e.get("rows") or 0) for e in files),
-        "bytes_total": sum(int(e.get("bytes") or 0) for e in files),
         "deletes": deletes,
     }
-    for key in ("columns", "schema_v", "schema_log"):
-        if key in m:
-            manifest[key] = m[key]
-    # same externalization rule as main (_publish): a big file list or
-    # ANY bloom bitmap moves to the parquet sidecar — branch manifest
-    # JSON stays metadata-scale even on bloom tables
-    files_ref = None
-    if len(files) > FILES_INLINE_MAX or any("bloom" in e for e in files):
-        files_ref = _write_files_sidecar(table_path, k + 1, files)
-        manifest["files_ref"] = files_ref
-    else:
-        manifest["files"] = files
-    published = False
     try:
-        _write_exclusive_json(
-            _branch_manifest_path(table_path, name, k + 1), manifest
+        _write_manifest(
+            table_path, _branch_manifest_path(table_path, name, k + 1),
+            k + 1, manifest, files, m, _write_exclusive_json,
         )
-        published = True
     except FileExistsError:
         raise CommitConflict(
             f"branch {name!r} advanced past local snapshot {k} while "
             "this commit was writing — re-read the branch head and retry"
         ) from None
-    finally:
-        if not published and files_ref is not None:
-            fp = os.path.join(table_path, files_ref)
-            if os.path.exists(fp):
-                os.remove(fp)
     return k + 1
-
-
-def _branch_write_ctx(table_path: str, name: str) -> tuple[int, dict, dict]:
-    """(head id, head manifest, ref) after the interrupted-FF heal —
-    the common entry of every branch write path."""
-    _heal_interrupted_ff(table_path, name)
-    k, m = _branch_head_manifest(table_path, name)
-    with open(_branch_ref_path(table_path, name)) as f:
-        ref = json.load(f)
-    return k, m, ref
-
-
-def _batch_key_stats(changes: DataFrame, keys: list[str], op: str):
-    """One aggregate pass over a merge batch: (row, nn_expr) where row
-    carries count / fully-keyed count / per-key min-max bounds. Raises
-    on duplicate keys among fully-keyed rows — both copies would
-    survive the merge (NULL-keyed rows are pure inserts, exempt)."""
-    nn = None
-    for c in keys:
-        e = F.col(c).isNotNull()
-        nn = e if nn is None else (nn & e)
-    aggs = [
-        F.count(F.lit(1)).alias("__n"),
-        F.count(F.when(nn, 1)).alias("__nk"),
-        F.count_distinct(*[F.col(c) for c in keys]).alias("__nd"),
-    ]
-    for c in keys:
-        aggs += [F.min(F.col(c)).alias(f"lo_{c}"),
-                 F.max(F.col(c)).alias(f"hi_{c}")]
-    row = changes.agg(*aggs).first()
-    if row["__nd"] < row["__nk"]:
-        raise ValueError(
-            f"{op}: changes contain {row['__nk'] - row['__nd']} "
-            f"duplicate-key row(s) on {keys} — both copies would "
-            "survive; dedup the batch first"
-        )
-    return row, nn
-
-
-def _batch_split(m: dict, row, keys: list[str], spark, changes):
-    """(touched, untouched) head files for a merge batch, using the
-    batch's bounding box + per-file bloom refinement — the same pruning
-    the main-table CoW merge applies (NULL-lo ⇒ pure insert; NaN bounds
-    ⇒ stats unusable, touch everything)."""
-    def _nan(v):
-        return isinstance(v, float) and v != v
-
-    if any(row[f"lo_{c}"] is None for c in keys):
-        return [], m["files"]
-    if any(_nan(row[f"lo_{c}"]) or _nan(row[f"hi_{c}"]) for c in keys):
-        return m["files"], []
-    box = {c: (row[f"lo_{c}"], row[f"hi_{c}"]) for c in keys}
-    touched, untouched = _split_by_box(m, box)
-    if any(e.get("bloom") for e in touched):
-        touched, skipped = _bloom_refine_touched(
-            spark, m, touched, changes, keys)
-        untouched = untouched + skipped
-    return touched, untouched
 
 
 def merge_branch(
@@ -3843,34 +3800,7 @@ def merge_branch(
     change files: branch manifests don't feed the change feed — the
     fast-forward commit is main's single observable change. Returns the
     branch-local snapshot id."""
-    k, m, ref = _branch_write_ctx(table_path, name)
-    _check_schema(changes, m)
-    _enforce_constraints(changes, table_path)
-    row, nn = _batch_key_stats(changes, keys, "merge_branch")
-    if row["__n"] == 0:
-        return k
-    touched, untouched = _batch_split(m, row, keys, spark, changes)
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    cols = [f.name for f in schema.fields]
-    if touched:
-        old = _read_entries(spark, table_path, m, touched)
-        kept = old.join(
-            F.broadcast(changes.select(*keys).distinct()), keys,
-            "left_anti",
-        )
-        new_data = kept.unionByName(changes.select(*cols))
-    else:
-        new_data = changes.select(*cols)
-    new_files = _stamp_seq(
-        _write_data_files(new_data, table_path, current_manifest=m),
-        ref["base"] + k,
-    )
-    # carried deletes (seq <= base+k) never shadow the rewrites
-    # (seq base+k+1); they still apply to untouched older files
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        untouched + new_files, m.get("deletes", []), "replace",
-    )
+    return _merge_cow(spark, _Target(table_path, name), changes, keys)
 
 
 def merge_branch_mor(
@@ -3888,55 +3818,7 @@ def merge_branch_mor(
     :func:`merge_snapshot_mor`. Fast-forward materializes pending
     branch-local sidecars first (they cannot ride the FF restamping),
     so publishing stays correct. Returns the branch-local id."""
-    k, m, ref = _branch_write_ctx(table_path, name)
-    _check_schema(changes, m)
-    _enforce_constraints(changes, table_path)
-    row, nn = _batch_key_stats(changes, keys, "merge_branch_mor")
-    if row["__n"] == 0:
-        return k
-
-    def _nan(v):
-        return isinstance(v, float) and v != v
-
-    box = None
-    if all(row[f"lo_{c}"] is not None for c in keys) and not any(
-        _nan(row[f"lo_{c}"]) or _nan(row[f"hi_{c}"]) for c in keys
-    ):
-        box = {c: [row[f"lo_{c}"], row[f"hi_{c}"]] for c in keys}
-        if not all(
-            isinstance(v, (int, float, str))
-            for pair in box.values() for v in pair
-        ):
-            box = None  # non-JSON key types: no box, shadow everything
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    new_seq_parent = ref["base"] + k
-    new_files = _stamp_seq(
-        _write_data_files(
-            changes.select(*[f.name for f in schema.fields]), table_path,
-            current_manifest=m,
-        ),
-        new_seq_parent,
-    )
-    deletes = list(m.get("deletes", []))
-    if row["__nk"] > 0:  # NULL-key rows are pure inserts
-        sidecar = _write_data_files(
-            changes.select(*keys).where(nn).distinct().coalesce(1),
-            table_path, subdir=_DELETES_DIR, current_manifest=m,
-        )
-        entry = {
-            "paths": [e["path"] for e in sidecar],
-            "rows": sum(e["rows"] for e in sidecar),
-            "keys": keys,
-            "seq": new_seq_parent + 1,
-            "box": box,
-        }
-        if "schema_v" in m:
-            entry["schema_v"] = m["schema_v"]
-        deletes.append(entry)
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        m["files"] + new_files, deletes, "merge-mor",
-    )
+    return _merge_mor(spark, _Target(table_path, name), changes, keys)
 
 
 def delete_branch_where(
@@ -3949,26 +3831,7 @@ def delete_branch_where(
     intersect the conjunctive box carry over; intersecting files
     rewrite with the complement rows only — one branch-local replace
     commit, main untouched. Returns the branch-local id."""
-    k, m, ref = _branch_write_ctx(table_path, name)
-    touched, untouched = _split_by_box(m, where)
-    new_files: list[dict] = []
-    if touched:
-        old = _read_entries(spark, table_path, m, touched)
-        inside = None
-        for c, (lo, hi) in where.items():
-            cond = F.col(c).between(lo, hi)
-            inside = cond if inside is None else (inside & cond)
-        new_files = _stamp_seq(
-            _write_data_files(
-                old.where(~F.coalesce(inside, F.lit(False))), table_path,
-                current_manifest=m,
-            ),
-            ref["base"] + k,
-        )
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        untouched + new_files, m.get("deletes", []), "replace",
-    )
+    return _delete_where(spark, _Target(table_path, name), where)
 
 
 def delete_branch_where_mor(
@@ -3982,35 +3845,7 @@ def delete_branch_where_mor(
     read or rewritten; branch reads filter shadowed rows out, and
     fast-forward folds the sidecar before publishing. Returns the
     branch-local id."""
-    import datetime
-
-    k, m, ref = _branch_write_ctx(table_path, name)
-
-    def _bound(v):
-        if isinstance(v, (datetime.date, datetime.datetime)):
-            return v.isoformat(sep=" ") if isinstance(
-                v, datetime.datetime
-            ) else v.isoformat()
-        if isinstance(v, (int, float, str)):
-            return v
-        raise ValueError(
-            f"delete_branch_where_mor: box bound {v!r} "
-            f"({type(v).__name__}) is not manifest-serializable — use "
-            "int/float/str/date/datetime, or delete_branch_where"
-        )
-
-    entry = {
-        "kind": "range",
-        "box": {c: [_bound(lo), _bound(hi)] for c, (lo, hi) in
-                where.items()},
-        "seq": ref["base"] + k + 1,
-    }
-    if "schema_v" in m:
-        entry["schema_v"] = m["schema_v"]
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        m["files"], m.get("deletes", []) + [entry], "delete-mor",
-    )
+    return _delete_where_mor(spark, _Target(table_path, name), where)
 
 
 def delete_branch_rows_mor(
@@ -4025,47 +3860,7 @@ def delete_branch_rows_mor(
     position entry NAMES its files so it can never apply to a rewritten
     successor. Completes the branch delete-kind matrix (equality /
     range / position — same as main). Returns the branch-local id."""
-    if isinstance(condition, str):
-        condition = F.expr(condition)
-    k, m, ref = _branch_write_ctx(table_path, name)
-    cur = _read_entries(
-        spark, table_path, m, m["files"], with_positions=True
-    )
-    hits = cur.where(condition).persist()
-    try:
-        n = hits.count()
-        if n == 0:
-            return k
-        files_named = sorted(
-            r["__file"] for r in hits.select("__file").distinct().collect()
-        )  # metadata-scale: one row per touched file
-        manifest_paths = {e["path"] for e in m["files"]}
-        stray = [p for p in files_named if p not in manifest_paths]
-        if stray:
-            raise ValueError(
-                "delete_branch_rows_mor: scan file paths do not resolve "
-                f"to manifest paths (e.g. {stray[:3]}) — table_path "
-                "normalization failed; use delete_branch_where instead"
-            )
-        sidecar = _write_data_files(
-            hits.select(
-                F.col("__file").alias("file"), F.col("__pos").alias("pos")
-            ).coalesce(1),
-            table_path, subdir=_DELETES_DIR, current_manifest=m,
-        )
-        entry = {
-            "kind": "position",
-            "paths": [e["path"] for e in sidecar],
-            "rows": n,
-            "files": files_named,
-            "seq": ref["base"] + k + 1,
-        }
-        return _publish_branch_commit(
-            table_path, name, k, m, ref,
-            m["files"], m.get("deletes", []) + [entry], "delete-mor",
-        )
-    finally:
-        hits.unpersist()
+    return _delete_rows_mor(spark, _Target(table_path, name), condition)
 
 
 def cluster_branch(
@@ -4083,30 +3878,8 @@ def cluster_branch(
     audited, and fast-forwards metadata-only, same loop as
     :func:`compact_branch`. ``curve`` picks Morton or Hilbert order.
     Returns the branch-local id."""
-    zorder_repartition = _curve_repartition(curve)
-
-    k, m, ref = _branch_write_ctx(table_path, name)
-    spec = table_partition_spec(table_path)
-    src = _read_entries(spark, table_path, m, m["files"])
-    if spec:
-        clustered = zorder_repartition(
-            src, zorder_cols, bits=bits, z_col="__z", arrange=False,
-        )
-        new_files = _write_data_files(
-            clustered, table_path, layout_sort=["__z"],
-            layout_partitions=num_partitions, current_manifest=m,
-        )
-    else:
-        clustered = zorder_repartition(
-            src, zorder_cols, bits=bits, num_partitions=num_partitions,
-        )
-        new_files = _write_data_files(
-            clustered, table_path, current_manifest=m,
-        )
-    new_files = _stamp_seq(new_files, ref["base"] + k)
-    return _publish_branch_commit(
-        table_path, name, k, m, ref, new_files, [], "replace",
-    )
+    return _cluster(spark, _Target(table_path, name), zorder_cols, bits,
+                    num_partitions, curve)
 
 
 def compact_branch(
@@ -4120,36 +3893,7 @@ def compact_branch(
     :func:`compact_snapshot` (new files carry the commit's seq);
     single-file bins stay in place. Returns the branch-local id, or
     None when nothing needed compaction."""
-    from ratatool_spark.operators.layout import compaction_plan
-
-    k, m, ref = _branch_write_ctx(table_path, name)
-    plan = compaction_plan(
-        manifest_files_df(spark, table_path, m=m), "bytes", ["path"],
-        target_bytes,
-    )
-    bins: dict[int, list[str]] = {}
-    for r in plan.collect():  # metadata-scale: one row per file
-        bins.setdefault(r["bin"], []).append(r["path"])
-    multi = {b: ps for b, ps in bins.items() if len(ps) > 1}
-    if not multi:
-        return None
-    by_path = {e["path"]: e for e in m["files"]}
-    new_files: list[dict] = []
-    removed: list[str] = []
-    for b in sorted(multi):
-        paths = multi[b]
-        merged = _read_entries(
-            spark, table_path, m, [by_path[p] for p in paths]
-        ).coalesce(1)
-        new_files.extend(
-            _write_data_files(merged, table_path, current_manifest=m))
-        removed.extend(paths)
-    kept = [e for e in m["files"] if e["path"] not in set(removed)]
-    _stamp_seq(new_files, ref["base"] + k)
-    return _publish_branch_commit(
-        table_path, name, k, m, ref,
-        kept + new_files, m.get("deletes", []), "replace",
-    )
+    return _compact(spark, _Target(table_path, name), target_bytes)
 
 
 def fold_branch_deletes(
@@ -4163,41 +3907,7 @@ def fold_branch_deletes(
     collapses branch file seqs onto one main commit, which would break
     the strictly-newer shadow ordering a sidecar relies on — folding
     first keeps FF a pure metadata publish of already-correct files."""
-    k, m, ref = _branch_write_ctx(table_path, name)
-    deletes = m.get("deletes", [])
-    if not deletes:
-        return None
-
-    def _may_shadow(e: dict) -> bool:
-        eseq = e.get("seq", 0)
-        for d in deletes:
-            if d["seq"] <= eseq:
-                continue
-            if d.get("kind") == "position":
-                if e["path"] in d.get("files", []):
-                    return True
-                continue
-            b = _delete_to_current(d, m).get("box")
-            if b is None:
-                return True
-            if files_intersecting({**m, "files": [e]},
-                                  {c: tuple(v) for c, v in b.items()}):
-                return True
-        return False
-
-    shadowed, clear = [], []
-    for e in m["files"]:
-        (shadowed if _may_shadow(e) else clear).append(e)
-    new_files = _stamp_seq(
-        _write_data_files(
-            _read_entries(spark, table_path, m, shadowed), table_path,
-            current_manifest=m,
-        ),
-        ref["base"] + k,
-    ) if shadowed else []
-    return _publish_branch_commit(
-        table_path, name, k, m, ref, clear + new_files, [], "replace",
-    )
+    return _fold(spark, _Target(table_path, name))
 
 
 def read_branch_snapshot(
@@ -4209,22 +3919,7 @@ def read_branch_snapshot(
     """Read a branch AS OF a branch-local snapshot id (default: head).
     Time travel within the branch lineage works exactly like main's —
     id 0 (or a fresh branch) reads the fork point."""
-    if snapshot_id is None or snapshot_id == (
-        branch_snapshot_ids(table_path, name) or [0]
-    )[-1]:
-        _, m = _branch_head_manifest(table_path, name)
-    elif snapshot_id == 0:
-        with open(_branch_ref_path(table_path, name)) as f:
-            ref = json.load(f)
-        m = read_manifest(table_path, ref["base"])
-    else:
-        p = _branch_manifest_path(table_path, name, snapshot_id)
-        if not os.path.exists(p):
-            raise FileNotFoundError(
-                f"branch {name!r} has no local snapshot {snapshot_id} "
-                f"(have {branch_snapshot_ids(table_path, name)})"
-            )
-        m = _load_branch_manifest(table_path, p)
+    m = _branch_manifest_at(table_path, name, snapshot_id)
     return _read_entries(spark, table_path, m, m["files"])
 
 
@@ -4241,10 +3936,8 @@ def fast_forward_branch(
     are removed; their files now belong to main), so the name stays
     usable — the Iceberg fastForward shape. Returns the new MAIN
     snapshot id."""
-    _heal_interrupted_ff(table_path, name)
-    k, m = _branch_head_manifest(table_path, name)
-    with open(_branch_ref_path(table_path, name)) as f:
-        ref = json.load(f)
+    t = _Target(table_path, name)
+    k, m, ref = t.k, t.m, t.ref
     if any(d["seq"] > ref["base"] for d in m.get("deletes", [])):
         # branch-local MoR sidecars cannot ride the FF restamping (all
         # branch file seqs collapse to one main commit, breaking the
@@ -4256,7 +3949,7 @@ def fast_forward_branch(
                 "— pass spark= to fast_forward_branch (it folds them "
                 "first) or run fold_branch_deletes yourself"
             )
-        k = fold_branch_deletes(spark, table_path, name)
+        k = _fold(spark, t)
         _, m = _branch_head_manifest(table_path, name)
     if k == 0:
         raise ValueError(
@@ -4288,22 +3981,7 @@ def fast_forward_branch(
         table_path, ref["base"], files, m["schema"], "append",
         extra=extra, deletes=m.get("deletes", []),
     )
-    # reset the branch at the new main head: old branch manifests are
-    # superseded (their files are now main's); the ref moves via atomic
-    # replace so a concurrent reader sees old-complete or new-complete
-    import time
-
-    tmp = _branch_ref_path(table_path, name) + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"name": name, "base": new_id, "created_at": time.time()}, f
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _branch_ref_path(table_path, name))
-    for i in branch_snapshot_ids(table_path, name):
-        if i <= k:
-            _remove_branch_manifest(table_path, name, i)
+    _reset_branch(table_path, name, new_id, k)
     return new_id
 
 
@@ -4335,13 +4013,7 @@ def table_constraints(table_path: str) -> dict[str, str]:
 
 
 def _write_constraints(table_path: str, cons: dict[str, str]) -> None:
-    p = os.path.join(table_path, _SNAP_DIR, _CONSTRAINTS_FILE)
-    tmp = p + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(cons, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    _replace_json(os.path.join(table_path, _SNAP_DIR, _CONSTRAINTS_FILE), cons)
 
 
 def _violation_counts(df: DataFrame, cons: dict[str, str]) -> dict[str, int]:
@@ -4422,10 +4094,11 @@ def fold_deletes(spark: SparkSession, table_path: str) -> int | None:
     clustering, which fold as a side effect of rewriting) before read
     amplification from stacked sidecars matters — each pending sidecar
     is one broadcast anti-join on every read."""
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
+    return _fold(spark, _Target(table_path))
+
+
+def _fold(spark: SparkSession, t: _Target) -> int | None:
+    m = t.m
     deletes = m.get("deletes", [])
     if not deletes:
         return None
@@ -4459,21 +4132,11 @@ def fold_deletes(spark: SparkSession, table_path: str) -> int | None:
     shadowed, clear = [], []
     for e in m["files"]:
         (shadowed if _may_shadow(e) else clear).append(e)
-    new_files = _stamp_seq(
-        _write_data_files(
-            _read_entries(spark, table_path, m, shadowed), table_path,
-            current_manifest=m,
-        ),
-        parent,
-    ) if shadowed else []
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while folding — replan"
-        )
-    return _publish(
-        table_path, parent, clear + new_files, m["schema"], "replace",
-        deletes=[], parent_manifest=m,
-    )
+    new_files = t.stamp(_write_data_files(
+        _read_entries(spark, t.path, m, shadowed), t.path,
+        current_manifest=m,
+    )) if shadowed else []
+    return t.publish(clear + new_files, [], "replace")
 
 
 def delete_snapshot_where(
@@ -4491,44 +4154,37 @@ def delete_snapshot_where(
     run expiry to complete an erasure. ``record_changes`` persists the
     deleted rows as ``_change_type='delete'`` change files for
     :func:`snapshot_change_feed` (same one-extra-pass cost as merge)."""
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
+    return _delete_where(spark, _Target(table_path), where, record_changes)
+
+
+def _delete_where(
+    spark: SparkSession, t: _Target, where: dict[str, tuple],
+    record_changes: bool = True,
+) -> int:
+    m = t.m
     touched, untouched = _split_by_box(m, where)
     if not touched:
-        return parent
-    old = _read_entries(spark, table_path, m, touched)
-    inside = None
-    for c, (lo, hi) in where.items():
-        cond = F.col(c).between(lo, hi)
-        inside = cond if inside is None else (inside & cond)
+        return t.noop_id
+    old = _read_entries(spark, t.path, m, touched)
+    inside = _inside_box(where)
     # NULL-valued rows never match a range predicate — KEEP them (a bare
     # where(~inside) would drop them: NOT(NULL) is NULL, which filters)
-    new_files = _stamp_seq(
-        _write_data_files(
-            old.where(F.coalesce(~inside, F.lit(True))), table_path,
-            current_manifest=m,
-        ),
-        parent,
-    )
+    new_files = t.stamp(_write_data_files(
+        old.where(F.coalesce(~inside, F.lit(True))), t.path,
+        current_manifest=m,
+    ))
     change_files: list[dict] = []
-    if record_changes:
+    if record_changes and t.cdc:
         change_files = _write_data_files(
             old.where(F.coalesce(inside, F.lit(False))).withColumn(
                 "_change_type", F.lit("delete")
             ),
-            table_path, subdir=_CHANGES_DIR, current_manifest=m,
+            t.path, subdir=_CHANGES_DIR, current_manifest=m,
         )
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while deleting — replan"
-        )
-    return _publish(
-        table_path, parent, untouched + new_files, m["schema"], "replace",
-        deletes=m.get("deletes", []), changes=change_files,
+    return t.publish(
+        untouched + new_files, m.get("deletes", []), "replace",
+        changes=change_files,
         extra={"change_op": "delete"} if change_files else None,
-        parent_manifest=m,
     )
 
 
@@ -4569,49 +4225,36 @@ def cluster_snapshot(
     clustered layout (`row_group_skip_audit` measures the payoff).
     Logical content is untouched — the `snapshot_cluster_zorder` gate
     pins the rewrite against the source table."""
-    zorder_repartition = _curve_repartition(curve)
+    return _cluster(spark, _Target(table_path), zorder_cols, bits,
+                    num_partitions, curve)
 
-    parent = current_snapshot_id(table_path)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshots under {table_path}")
-    m = read_manifest(table_path, parent)
-    spec = table_partition_spec(table_path)
-    if spec:
+
+def _cluster(
+    spark: SparkSession, t: _Target, zorder_cols: list[str], bits: int,
+    num_partitions: int | None, curve: str,
+) -> int:
+    zorder_repartition = _curve_repartition(curve)
+    # full rewrite through the deletes-aware read: every pending
+    # merge-on-read delete is folded, so the new manifest carries none
+    src = _read_entries(spark, t.path, t.m, t.m["files"])
+    if table_partition_spec(t.path):
         # partitioned table: attach the curve key only and let the
         # writer range-arrange on (partition cols, key) — locality
         # WITHIN each partition, partition alignment preserved, one
         # exchange instead of two
-        clustered = zorder_repartition(
-            read_snapshot(spark, table_path, parent),
-            zorder_cols, bits=bits, z_col="__z", arrange=False,
-        )
-        new_files = _stamp_seq(
-            _write_data_files(
-                clustered, table_path, layout_sort=["__z"],
-                layout_partitions=num_partitions, current_manifest=m,
-            ),
-            parent,
+        new_files = _write_data_files(
+            zorder_repartition(src, zorder_cols, bits=bits, z_col="__z",
+                               arrange=False),
+            t.path, layout_sort=["__z"], layout_partitions=num_partitions,
+            current_manifest=t.m,
         )
     else:
-        clustered = zorder_repartition(
-            read_snapshot(spark, table_path, parent),
-            zorder_cols,
-            bits=bits,
-            num_partitions=num_partitions,
+        new_files = _write_data_files(
+            zorder_repartition(src, zorder_cols, bits=bits,
+                               num_partitions=num_partitions),
+            t.path, current_manifest=t.m,
         )
-        # full rewrite through the deletes-aware read: every pending
-        # merge-on-read delete is folded, so the new manifest carries
-        # none
-        new_files = _stamp_seq(
-            _write_data_files(clustered, table_path, current_manifest=m),
-            parent,
-        )
-    if current_snapshot_id(table_path) != parent:
-        raise CommitConflict(
-            f"snapshot advanced past {parent} while clustering — replan"
-        )
-    return _publish(table_path, parent, new_files, m["schema"],
-                    "replace", parent_manifest=m)
+    return t.publish(t.stamp(new_files), [], "replace")
 
 
 def commit_with_retry(fn, max_retries: int = 3):
@@ -5120,126 +4763,23 @@ def snapshot_log(spark: SparkSession, table_path: str) -> DataFrame:
     )
 
 
-def _branch_manifest_at(table_path: str, name: str, k: int | None) -> dict:
+def _branch_manifest_at(
+    table_path: str, name: str, k: int | None, load_files: bool = True
+) -> dict:
     """A branch-local manifest by id (None = head; 0 = fork point)."""
     if k is None:
         return _branch_head_manifest(table_path, name)[1]
     if k == 0:
         with open(_branch_ref_path(table_path, name)) as f:
-            return read_manifest(table_path, json.load(f)["base"])
+            return read_manifest(
+                table_path, json.load(f)["base"], load_files=load_files)
     p = _branch_manifest_path(table_path, name, k)
     if not os.path.exists(p):
         raise FileNotFoundError(
             f"branch {name!r} has no local snapshot {k} "
             f"(have {branch_snapshot_ids(table_path, name)})"
         )
-    return _load_branch_manifest(table_path, p)
-
-
-def _branch_metadata_table(
-    spark: SparkSession,
-    table_path: str,
-    kind: str,
-    snapshot_id: int | None,
-    branch: str,
-) -> DataFrame:
-    """The inspection surface scoped to one branch's lineage — same
-    schemas as the main views so consumers union them freely;
-    snapshot ids are BRANCH-LOCAL (1-based; parent 0 = fork point)."""
-    if kind == "files":
-        m = _branch_manifest_at(table_path, branch, snapshot_id)
-        sid = snapshot_id if snapshot_id is not None \
-            else m.get("branch_id", 0)
-        return manifest_files_df(spark, table_path, m=m).select(
-            F.lit(sid).cast("bigint").alias("snapshot_id"), "*"
-        )
-    if kind == "snapshots":
-        rows = []
-        for k in branch_snapshot_ids(table_path, branch):
-            m = _branch_manifest_at(table_path, branch, k)
-            if "rows_total" in m:
-                n_f, n_rows, n_bytes = (
-                    m["n_files"], m["rows_total"], m["bytes_total"])
-            else:  # pre-totals branch manifest
-                n_f = len(m["files"])
-                n_rows = sum(e["rows"] for e in m["files"])
-                n_bytes = sum(e["bytes"] for e in m["files"])
-            rows.append((
-                k, k - 1, float(m.get("committed_at", 0.0)),
-                m["operation"], n_f, n_rows, n_bytes,
-                len(m.get("deletes", [])), len(m.get("changes", [])),
-            ))
-        return local_df(
-            spark,
-            rows,
-            "snapshot_id bigint, parent bigint, committed_at double, "
-            "operation string, n_files bigint, rows bigint, bytes bigint, "
-            "n_pending_deletes bigint, n_change_files bigint",
-        )
-    if kind == "history":
-        # branch lineage is linear (no rollback surface): every local
-        # commit is an ancestor of the head
-        rows = [
-            (float(_branch_manifest_at(table_path, branch, k)
-                   .get("committed_at", 0.0)), k, k - 1, True)
-            for k in branch_snapshot_ids(table_path, branch)
-        ]
-        return local_df(
-            spark,
-            rows,
-            "made_current_at double, snapshot_id bigint, parent bigint, "
-            "is_current_ancestor boolean",
-        )
-    if kind == "partitions":
-        m = _branch_manifest_at(table_path, branch, snapshot_id)
-        agg: dict[tuple, list] = {}
-        for e in m["files"]:
-            key = tuple(sorted((e.get("partition") or {}).items()))
-            a = agg.setdefault(key, [0, 0, 0])
-            a[0] += 1
-            a[1] += e["rows"]
-            a[2] += e["bytes"]
-        rows = [
-            ({kk: (None if v is None else str(v)) for kk, v in key},
-             a[0], a[1], a[2])
-            for key, a in agg.items()
-        ]
-        return local_df(
-            spark,
-            rows,
-            "partition map<string,string>, n_files bigint, "
-            "rows bigint, bytes bigint",
-        )
-    if kind == "manifests":
-        rows = []
-        for k in branch_snapshot_ids(table_path, branch):
-            mpath = _branch_manifest_path(table_path, branch, k)
-            m = _load_branch_manifest(table_path, mpath, load_files=False)
-            ext = "files_ref" in m
-            ref = m.get("files_ref")
-            ref_bytes = None
-            if ext:
-                sp = os.path.join(table_path, ref)
-                ref_bytes = (
-                    os.path.getsize(sp) if os.path.exists(sp) else None)
-            rows.append((
-                k, os.path.relpath(mpath, table_path),
-                os.path.getsize(mpath), ext, ref, ref_bytes,
-                m["n_files"] if ext else len(m.get("files", [])),
-                len(m.get("deletes", [])), len(m.get("changes", [])),
-            ))
-        return local_df(
-            spark,
-            rows,
-            "snapshot_id bigint, path string, bytes bigint, "
-            "externalized boolean, files_ref string, "
-            "files_ref_bytes bigint, n_files bigint, "
-            "n_pending_deletes bigint, n_change_files bigint",
-        )
-    raise ValueError(
-        f"metadata table {kind!r} has no branch scope — branch= applies "
-        "to files, snapshots, history, partitions, manifests"
-    )
+    return _load_branch_manifest(table_path, p, load_files=load_files)
 
 
 def metadata_table(
@@ -5280,35 +4820,77 @@ def metadata_table(
     branch's lineage (branch-local 1-based ids; parent 0 = fork point)
     — same schemas, so main and branch views union freely.
     """
-    if branch is not None:
-        return _branch_metadata_table(
-            spark, table_path, kind, snapshot_id, branch)
+    if branch is None:
+        if kind == "refs":
+            rows = [("main", "branch",
+                     current_snapshot_id(table_path) or 0, 0)]
+            for name, t in sorted(table_tags(table_path).items()):
+                rows.append((name, "tag", t["snapshot_id"], 0))
+            for name, b in sorted(table_branches(table_path).items()):
+                rows.append((name, "branch", b["base"], b["head"]))
+            return local_df(
+                spark,
+                rows,
+                "name string, type string, snapshot_id bigint, "
+                "branch_head bigint",
+            )
+        # the main lineage
+        ids = _snap_ids(table_path)
+        head = ids[-1] if ids else None
+
+        def load(sid, load_files=True):
+            return read_manifest(table_path, sid, load_files=load_files)
+
+        def mpath(sid):
+            return _snap_path(table_path, sid)
+
+        def parent_of(sid, m):
+            return m["parent"]
+    else:
+        if kind not in ("files", "snapshots", "history", "partitions",
+                        "manifests"):
+            raise ValueError(
+                f"metadata table {kind!r} has no branch scope — branch= "
+                "applies to files, snapshots, history, partitions, "
+                "manifests"
+            )
+        # a branch lineage: branch-local ids, 0 = the fork point
+        ids = branch_snapshot_ids(table_path, branch)
+        head = (ids or [0])[-1]
+
+        def load(k, load_files=True):
+            return _branch_manifest_at(table_path, branch, k, load_files)
+
+        def mpath(k):
+            return _branch_manifest_path(table_path, branch, k)
+
+        def parent_of(k, m):
+            return k - 1
+    sid = snapshot_id if snapshot_id is not None else head
     if kind == "files":
-        sid = snapshot_id if snapshot_id is not None \
-            else current_snapshot_id(table_path)
-        return manifest_files_df(spark, table_path, sid).select(
-            F.lit(sid).cast("bigint").alias("snapshot_id"), "*"
-        )
+        return manifest_files_df(
+            spark, table_path, m=load(sid, load_files=False)
+        ).select(F.lit(sid).cast("bigint").alias("snapshot_id"), "*")
     if kind == "snapshots":
         rows = []
-        for sid in _snap_ids(table_path):
+        for i in ids:
             # O(#commits): commit-time totals make the view independent
             # of file-list size — no sidecar is ever opened for a
             # manifest that records them (every manifest since they
             # were introduced does; the fallback load covers older
             # inline manifests only)
-            m = read_manifest(table_path, sid, load_files=False)
+            m = load(i, load_files=False)
             if "rows_total" in m:
                 n_f = m["n_files"]
                 n_rows = m["rows_total"]
                 n_bytes = m["bytes_total"]
             else:
-                m = read_manifest(table_path, sid)
+                m = load(i)
                 n_f = len(m["files"])
                 n_rows = sum(e["rows"] for e in m["files"])
                 n_bytes = sum(e["bytes"] for e in m["files"])
             rows.append((
-                sid, m["parent"], float(m.get("committed_at", 0.0)),
+                i, parent_of(i, m), float(m.get("committed_at", 0.0)),
                 m["operation"], n_f, n_rows, n_bytes,
                 len(m.get("deletes", [])), len(m.get("changes", [])),
             ))
@@ -5320,20 +4902,19 @@ def metadata_table(
             "n_pending_deletes bigint, n_change_files bigint",
         )
     if kind == "history":
-        ids = _snap_ids(table_path)
         ancestors: set[int] = set()
         cur = ids[-1] if ids else None
-        metas = {s: read_manifest(table_path, s, load_files=False)
-                 for s in ids}
+        metas = {i: load(i, load_files=False) for i in ids}
         while cur is not None and cur in metas:
             ancestors.add(cur)
             # a rollback commit restores an older state: its logical
             # ancestor is the restore TARGET, not the abandoned tip
-            cur = metas[cur].get("rolled_back_to", metas[cur]["parent"])
+            cur = metas[cur].get(
+                "rolled_back_to", parent_of(cur, metas[cur]))
         rows = [
-            (float(metas[s].get("committed_at", 0.0)), s,
-             metas[s]["parent"], s in ancestors)
-            for s in ids
+            (float(metas[i].get("committed_at", 0.0)), i,
+             parent_of(i, metas[i]), i in ancestors)
+            for i in ids
         ]
         return local_df(
             spark,
@@ -5342,11 +4923,8 @@ def metadata_table(
             "is_current_ancestor boolean",
         )
     if kind == "partitions":
-        sid = snapshot_id if snapshot_id is not None \
-            else current_snapshot_id(table_path)
-        m = read_manifest(table_path, sid)
         agg: dict[tuple, list] = {}
-        for e in m["files"]:
+        for e in load(sid)["files"]:
             key = tuple(sorted((e.get("partition") or {}).items()))
             a = agg.setdefault(key, [0, 0, 0])
             a[0] += 1
@@ -5365,9 +4943,8 @@ def metadata_table(
         )
     if kind == "manifests":
         rows = []
-        for sid in _snap_ids(table_path):
-            m = read_manifest(table_path, sid, load_files=False)
-            mpath = _snap_path(table_path, sid)
+        for i in ids:
+            m = load(i, load_files=False)
             ext = "files_ref" in m
             ref = m.get("files_ref")
             ref_bytes = None
@@ -5376,8 +4953,8 @@ def metadata_table(
                 ref_bytes = (
                     os.path.getsize(sp) if os.path.exists(sp) else None)
             rows.append((
-                sid, os.path.relpath(mpath, table_path),
-                os.path.getsize(mpath), ext, ref, ref_bytes,
+                i, os.path.relpath(mpath(i), table_path),
+                os.path.getsize(mpath(i)), ext, ref, ref_bytes,
                 m["n_files"] if ext else len(m.get("files", [])),
                 len(m.get("deletes", [])), len(m.get("changes", [])),
             ))
@@ -5388,19 +4965,6 @@ def metadata_table(
             "externalized boolean, files_ref string, "
             "files_ref_bytes bigint, n_files bigint, "
             "n_pending_deletes bigint, n_change_files bigint",
-        )
-    if kind == "refs":
-        rows = [("main", "branch",
-                 current_snapshot_id(table_path) or 0, 0)]
-        for name, t in sorted(table_tags(table_path).items()):
-            rows.append((name, "tag", t["snapshot_id"], 0))
-        for name, b in sorted(table_branches(table_path).items()):
-            rows.append((name, "branch", b["base"], b["head"]))
-        return local_df(
-            spark,
-            rows,
-            "name string, type string, snapshot_id bigint, "
-            "branch_head bigint",
         )
     raise ValueError(
         f"unknown metadata table {kind!r} — one of files, snapshots, "

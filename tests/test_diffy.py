@@ -106,6 +106,32 @@ def test_one_sided_null_unknown(spark):
     assert d[0]["right"] is None
 
 
+def test_date_and_timestamp_epoch_seconds_delta(spark):
+    """DATE and TIMESTAMP columns both diff as an epoch-seconds numeric
+    delta (DATE cannot be cast to double, so it goes through the day
+    count)."""
+    import datetime as dt
+
+    schema = "id long, d date, t timestamp"
+    lhs = spark.createDataFrame(
+        [(1, dt.date(2024, 1, 1), dt.datetime(2024, 1, 1, 0, 0, 0)),
+         (2, dt.date(2024, 3, 1), dt.datetime(2024, 3, 1, 12, 0, 0))],
+        schema,
+    )
+    rhs = spark.createDataFrame(
+        [(1, dt.date(2024, 1, 3), dt.datetime(2024, 1, 1, 0, 1, 30)),
+         (2, dt.date(2024, 3, 1), dt.datetime(2024, 3, 1, 12, 0, 0))],
+        schema,
+    )
+    d = {r["field"]: r for r in diff(lhs, rhs, ["id"]).deltas.collect()}
+    assert set(d) == {"d", "t"}
+    assert d["d"]["delta_type"] == "NUMERIC"
+    assert d["d"]["delta"] == 2 * 86400.0
+    assert (d["d"]["left"], d["d"]["right"]) == ("2024-01-01", "2024-01-03")
+    assert d["t"]["delta_type"] == "NUMERIC"
+    assert d["t"]["delta"] == 90.0
+
+
 def test_ignore_fields(spark, base):
     rhs = base.withColumn("x", F.col("x") + 1).withColumn("s", F.lit("zzz"))
     d = BigDiffy(base, rhs, ["id"], ignore={"s"})

@@ -1326,10 +1326,13 @@ def test_stream_source_expired_snapshot_raises_rebase_error(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "seed,partitioned", [(7, False), (1234, False), (42, True)]
+    "seed,partitioned,ref",
+    [(7, False, "main"), (1234, False, "main"), (42, True, "main"),
+     (7, False, "branch")],
+    ids=["7-False", "1234-False", "42-True", "7-False-branch"],
 )
 def test_randomized_op_sequence_equals_model(
-    spark, tmp_path, seed, partitioned
+    spark, tmp_path, seed, partitioned, ref
 ):
     """Whole-layer fuzz: a random interleaving of append / CoW merge /
     MoR merge / range delete / position delete / fold / compact /
@@ -1340,26 +1343,37 @@ def test_randomized_op_sequence_equals_model(
     surface (MoR sidecars included). The ``partitioned`` variant runs
     the same op mix on a bucket(id)-partitioned table and additionally
     asserts the partition-alignment lifecycle invariant after every op
-    (every maintenance rewrite must re-derive partition tuples)."""
+    (every maintenance rewrite must re-derive partition tuples). The
+    ``branch`` variant drives the op mix (minus rollback: branches have
+    none) through the branch entry points on a branch forked after the
+    first commit, then fast-forwards it and checks main."""
     import random
 
-    from ratatool_spark.operators.snapshots import (
-        delete_snapshot_rows_mor,
-        delete_snapshot_where,
-        delete_snapshot_where_mor,
-        fold_deletes,
-        merge_snapshot,
-        merge_snapshot_mor,
-        rollback_snapshot,
-    )
+    import ratatool_spark.operators.snapshots as snap
 
     rng = random.Random(seed)
     path = str(tmp_path / f"fz{seed}")
+    on_branch = ref == "branch"
 
     def df_of(d):
         return spark.createDataFrame(
             sorted(d.items()), "id long, val long"
         )
+
+    def run(main_fn, branch_fn, *args):
+        if on_branch:
+            return branch_fn(spark, path, "fz", *args)
+        return main_fn(spark, path, *args)
+
+    def head_id():
+        if on_branch:
+            return (snap.branch_snapshot_ids(path, "fz") or [0])[-1]
+        return current_snapshot_id(path)
+
+    def read_at(sid=None):
+        if on_branch:
+            return snap.read_branch_snapshot(spark, path, "fz", sid)
+        return read_snapshot(spark, path, snapshot_id=sid)
 
     state = {i: i * 10 for i in range(40)}
     spec = (
@@ -1367,48 +1381,58 @@ def test_randomized_op_sequence_equals_model(
         if partitioned else None
     )
     commit_append(df_of(state), path, partition_spec=spec)
-    history = {1: dict(state)}
+    if on_branch:
+        snap.create_branch(path, "fz")
+    history = {head_id(): dict(state)}
 
+    ops = ["append", "merge", "merge_mor", "delete", "delete_mor",
+           "delete_pos", "fold", "compact"]
     for _step in range(8):
-        op = rng.choice(
-            ["append", "merge", "merge_mor", "delete", "delete_mor",
-             "delete_pos", "fold", "compact", "rollback"]
-        )
+        op = rng.choice(ops if on_branch else ops + ["rollback"])
         if op == "append":
             base = max(state, default=0) + 1
             batch = {base + j: rng.randint(-99, 99) for j in range(rng.randint(1, 8))}
             state.update(batch)
-            commit_append(df_of(batch), path)
+            if on_branch:
+                snap.commit_append_branch(df_of(batch), path, "fz")
+            else:
+                commit_append(df_of(batch), path)
         elif op in ("merge", "merge_mor"):
             ks = rng.sample(range(150), rng.randint(1, 12))
             batch = {k: rng.randint(-999, 999) for k in ks}
             state.update(batch)
-            fn = merge_snapshot if op == "merge" else merge_snapshot_mor
-            fn(spark, path, df_of(batch), ["id"])
+            if op == "merge":
+                run(snap.merge_snapshot, snap.merge_branch,
+                    df_of(batch), ["id"])
+            else:
+                run(snap.merge_snapshot_mor, snap.merge_branch_mor,
+                    df_of(batch), ["id"])
         elif op in ("delete", "delete_mor"):
             lo = rng.randint(0, 120)
             hi = lo + rng.randint(0, 30)
             state = {k: v for k, v in state.items() if not lo <= k <= hi}
-            fn = (delete_snapshot_where if op == "delete"
-                  else delete_snapshot_where_mor)
-            fn(spark, path, {"id": (lo, hi)})
+            if op == "delete":
+                run(snap.delete_snapshot_where, snap.delete_branch_where,
+                    {"id": (lo, hi)})
+            else:
+                run(snap.delete_snapshot_where_mor,
+                    snap.delete_branch_where_mor, {"id": (lo, hi)})
         elif op == "delete_pos":
             mod = rng.randint(2, 9)
             rem = rng.randint(0, mod - 1)
             state = {k: v for k, v in state.items() if k % mod != rem}
-            delete_snapshot_rows_mor(spark, path, f"id % {mod} = {rem}")
+            run(snap.delete_snapshot_rows_mor, snap.delete_branch_rows_mor,
+                f"id % {mod} = {rem}")
         elif op == "fold":
-            fold_deletes(spark, path)
+            run(snap.fold_deletes, snap.fold_branch_deletes)
         elif op == "compact":
-            compact_snapshot(spark, path, target_bytes=1 << 30)
+            run(snap.compact_snapshot, snap.compact_branch, 1 << 30)
         else:  # rollback to a random retained snapshot
             target = rng.choice(sorted(history))
-            rollback_snapshot(path, target)
+            snap.rollback_snapshot(path, target)
             state = dict(history[target])
-        history[current_snapshot_id(path)] = dict(state)
-        got = {
-            r["id"]: r["val"] for r in read_snapshot(spark, path).collect()
-        }
+        history[head_id()] = dict(state)
+        got = {r["id"]: r["val"] for r in read_at().collect()}
         assert got == state, f"divergence after {op} (step {_step})"
         if partitioned:
             m = read_manifest(path)
@@ -1418,11 +1442,14 @@ def test_randomized_op_sequence_equals_model(
 
     # every retained snapshot time-travels to its recorded model state
     for sid, model in history.items():
-        got = {
-            r["id"]: r["val"]
-            for r in read_snapshot(spark, path, snapshot_id=sid).collect()
-        }
+        got = {r["id"]: r["val"] for r in read_at(sid).collect()}
         assert got == model, f"time travel to {sid} diverged"
+    if on_branch:
+        snap.fast_forward_branch(path, "fz", spark=spark)
+        got = {
+            r["id"]: r["val"] for r in read_snapshot(spark, path).collect()
+        }
+        assert got == state, "main diverged after the fast-forward"
 
 
 def test_mor_range_delete_metadata_only(spark, tmp_path):
@@ -3013,6 +3040,83 @@ def test_exclusive_json_fallback_atomic_publish(tmp_path, monkeypatch):
     assert not _os.path.exists(p) and not _os.path.exists(p + ".claim")
     snap._write_exclusive_json(p, {"v": 3})  # name re-creatable
     assert _json.load(open(p)) == {"v": 3}
+
+
+def test_stage_append_fallback_publish_leaves_no_claim(
+    spark, tmp_path, monkeypatch
+):
+    """On filesystems without hard links the WAP stage file publishes
+    through the claim-file + atomic-rename fallback; discard and
+    publish remove the claim with the stage, so the branch name stays
+    re-stageable and nothing is left behind."""
+    import ratatool_spark.operators.snapshots as snap
+
+    path = str(tmp_path / "wapnl")
+    snap.commit_append(
+        spark.createDataFrame([(1, 10)], "id long, val long"), path
+    )
+
+    def no_link(src, dst):
+        raise OSError("no hard links here")
+
+    monkeypatch.setattr(snap.os, "link", no_link)
+    sp = snap._stage_path(path, "etl")
+    batch = spark.createDataFrame([(2, 20)], "id long, val long")
+    assert snap.stage_append(batch, path, "etl") == 1
+    assert json.load(open(sp))["parent"] == 1
+    with pytest.raises(snap.BranchExists):
+        snap.stage_append(batch, path, "etl")
+    assert snap.discard_branch(path, "etl")
+    assert not os.path.exists(sp) and not os.path.exists(sp + ".claim")
+    assert snap.stage_append(batch, path, "etl") == 1  # re-stageable
+    assert snap.read_branch(spark, path, "etl").count() == 2
+    assert snap.publish_branch(spark, path, "etl") == 2
+    assert snap.read_snapshot(spark, path).count() == 2
+    left = [
+        f for f in os.listdir(os.path.join(path, "snapshots"))
+        if f.endswith(".claim") or ".tmp-" in f
+    ]
+    assert left == [], left
+
+
+@pytest.mark.parametrize("ref", ["main", "branch"])
+def test_noop_commits_publish_nothing(spark, tmp_path, ref):
+    """One no-op rule for both refs: a CoW range delete whose box
+    touches no file and an empty merge batch (CoW or MoR) return the
+    head id and publish no manifest."""
+    import ratatool_spark.operators.snapshots as snap
+
+    path = str(tmp_path / "noop")
+    # one file per commit: every file carries stats the miss box excludes
+    snap.commit_append(
+        spark.createDataFrame(
+            [(1, 10), (2, 20)], "id long, val long").coalesce(1),
+        path,
+    )
+    empty = spark.createDataFrame([], "id long, val long")
+    miss = {"id": (100, 200)}
+    if ref == "main":
+        head = snap.current_snapshot_id(path)
+        calls = [
+            lambda: snap.delete_snapshot_where(spark, path, miss),
+            lambda: snap.merge_snapshot(spark, path, empty, ["id"]),
+            lambda: snap.merge_snapshot_mor(spark, path, empty, ["id"]),
+        ]
+    else:
+        snap.create_branch(path, "dev")
+        head = snap.commit_append_branch(
+            spark.createDataFrame([(3, 30)], "id long, val long").coalesce(1),
+            path, "dev",
+        )
+        calls = [
+            lambda: snap.delete_branch_where(spark, path, "dev", miss),
+            lambda: snap.merge_branch(spark, path, "dev", empty, ["id"]),
+            lambda: snap.merge_branch_mor(spark, path, "dev", empty, ["id"]),
+        ]
+    ledger = sorted(os.listdir(os.path.join(path, "snapshots")))
+    for call in calls:
+        assert call() == head
+        assert sorted(os.listdir(os.path.join(path, "snapshots"))) == ledger
 
 
 def test_branch_merge_cow_and_ff(spark, tmp_path):
